@@ -21,7 +21,7 @@ across runs and engines.
 from __future__ import annotations
 
 import hashlib
-import os
+import math
 import re
 from collections import OrderedDict
 
@@ -91,8 +91,6 @@ def _double_array_literal(vals: list[float]):
     argument as :func:`_centroid_literal`); non-finite values fall
     back to the per-element form because SQL has no inf/nan double
     literal."""
-    import math
-
     if all(isinstance(x, float) and math.isfinite(x) for x in vals):
         return F.expr("array(" + ",".join(f"{x!r}D" for x in vals) + ")")
     return F.array(*[F.lit(float(x)) for x in vals])
@@ -397,9 +395,7 @@ def _hash_sample_rows(
 #: stays on the bit-exact literal path with 16× headroom, and the
 #: path-consistency rule is unchanged (cut-over depends only on the
 #: centroid-set size, so a given index always assigns via one shape).
-_ASSIGN_LITERAL_MAX_ELEMENTS = int(
-    os.environ.get("SPARK_GRAFT_ASSIGN_LITERAL_MAX", "16384")
-)
+_ASSIGN_LITERAL_MAX_ELEMENTS = 16384
 
 
 #: per-centroid-set broadcast memo for the Arrow assignment kernel —
@@ -433,18 +429,12 @@ def _assign_broadcast(spark, cells_np, cent_np, c_norms):
 
 
 def _assign_cells_arrow(
-    df: DataFrame,
-    rows: list,
-    id_alias: str,
-    keep_n: int,
-    vec_col: str,
-    id_col: str,
-    keep_dist: bool,
+    base: DataFrame, rows: list, id_alias: str, keep_n: int
 ) -> DataFrame:
     """Arrow-batched nearest-cell assignment — the PRODUCTION-SCALE
     shape of :func:`_assign_cells`, used when the centroid set is too
     large to ride into the plan as a literal (n_lists × dim above
-    ``SPARK_GRAFT_ASSIGN_LITERAL_MAX`` — e.g. the 100 TB design point
+    ``_ASSIGN_LITERAL_MAX_ELEMENTS`` — e.g. the 100 TB design point
     of n_lists 4096 × dim 768 = 3.1 M elements). Same NARROW topology
     as the literal path: zero shuffles, each task scores its own rows
     against the broadcast centroid matrix with one float64 GEMM per
@@ -462,11 +452,12 @@ def _assign_cells_arrow(
     fold — and the path cut-over depends only on the centroid-set
     size, so every assignment a given index ever performs (build,
     append, probe, rebalance) takes the SAME path and the drift
-    baseline is compared like-for-like."""
+    baseline is compared like-for-like. ``base`` is the
+    (id_alias, __v) projection; output adds (cell, __d2)."""
     import numpy as np
     from pyspark.sql import types as T
 
-    spark = df.sparkSession
+    spark = base.sparkSession
     cells_np = np.asarray([int(r["cell"]) for r in rows], dtype=np.int32)
     cent_np = np.asarray(
         [list(r["centroid"]) for r in rows], dtype=np.float64
@@ -474,10 +465,6 @@ def _assign_cells_arrow(
     c_norms = np.einsum("ij,ij->i", cent_np, cent_np)
     bc = _assign_broadcast(spark, cells_np, cent_np, c_norms)
     n_keep = min(keep_n, len(rows))
-
-    base = df.select(
-        F.col(id_col).alias(id_alias), F.col(vec_col).alias("__v")
-    )
     out_schema = T.StructType(
         [
             base.schema[id_alias],
@@ -536,33 +523,12 @@ def _assign_cells_arrow(
                 out["__d2"] = d2.ravel()
             yield out
 
-    out = base.mapInPandas(assign, schema=out_schema)
-    if keep_dist:
-        return out
-    return out.select(id_alias, F.col("__v"), "cell")
+    return base.mapInPandas(assign, schema=out_schema)
 
 
 #: the on-disk centroid table schema, fixed by every writer
 #: (write_ann_index / rebalance_ann_index)
 _CENTROID_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>"
-
-
-def _cells_reader(spark, meta: dict):
-    """``spark.read`` for the plain-dir ``cells`` table, with the
-    sidecar-recorded schema applied when the index carries one
-    (``cells_schema``, recorded at build/rebalance from a read-back
-    of the freshly written dir — so nullability and partition-column
-    placement are exactly what inference would produce). Skips the
-    per-probe footer read and partition-type inference; pre-round-13
-    indexes without the field fall back to inference."""
-    sj = meta.get("cells_schema")
-    if not sj:
-        return spark.read
-    import json
-
-    from pyspark.sql.types import StructType
-
-    return spark.read.schema(StructType.fromJson(json.loads(sj)))
 
 
 def _probed_cells_df(spark, meta: dict, cells_path: str, probed: list):
@@ -581,15 +547,20 @@ def _probed_cells_df(spark, meta: dict, cells_path: str, probed: list):
     probed dirs == reading all dirs + the isin filter (which stays
     applied downstream either way).
 
-    Returns None — caller falls back to the full-listing read — when
-    the sidecar carries no recorded ``cells_schema`` (pre-round-13
-    index: subset-based partition-type inference is not provably
-    identical to full-dir inference, so legacy indexes keep the old
-    path). ``SPARK_GRAFT_ANN_PROBE_DIRS=0`` forces the fallback for
-    A/B drills."""
+    The read applies the sidecar-recorded ``cells_schema`` (every
+    writer records it from a read-back of the dir it wrote, so
+    nullability and partition-column placement are exactly what
+    inference over the whole dir would produce; inference over a
+    subset of dirs is not provably the same). A sidecar without it
+    describes no dir this build wrote — loud error, rebuild the
+    index."""
     sj = meta.get("cells_schema")
-    if not sj or os.environ.get("SPARK_GRAFT_ANN_PROBE_DIRS", "1") == "0":
-        return None
+    if not sj:
+        raise ValueError(
+            f"ANN index sidecar records no cells_schema for "
+            f"{cells_path}: the index was written by an older build; "
+            "rebuild it with write_ann_index / write_rp_index."
+        )
     import json
 
     from pyspark.sql.types import StructType
@@ -635,8 +606,6 @@ def _centroid_literal(rows: list):
     comprehension (asserted in tests). Non-finite values (never
     produced by real vector data) fall back to the per-element form
     because SQL has no inf/nan double literal."""
-    import math
-
     finite = all(
         isinstance(x, float) and math.isfinite(x)
         for r in rows
@@ -685,43 +654,31 @@ def _assign_cells(
     array literal and every row computes its top-``keep_n`` cells in
     ONE narrow projection — ``transform`` over the centroid array
     (the same per-centroid fold expression, so d2 is bit-identical),
-    ``array_sort`` on (d2, cell) structs (same tie-break as the old
-    window), ``slice`` + explode. The previous shape — crossJoin to
-    n_lists× the corpus rows, then a Window.partitionBy(id) — shuffled
-    and sorted the EXPLODED corpus: ~25 GB at 2M×64 and terabytes at
-    the 200M decade; build time was super-linear (17.6×/decade) before
-    this change. A centroid set too large for a literal plan
-    (n_lists × dim > SPARK_GRAFT_ASSIGN_LITERAL_MAX) switches to
+    ``array_sort`` on (d2, cell) structs, ``slice`` + explode. A
+    centroid set too large for a literal plan (n_lists × dim >
+    ``_ASSIGN_LITERAL_MAX_ELEMENTS``) switches to
     :func:`_assign_cells_arrow` — the same narrow zero-shuffle
     topology with a float64 GEMM per Arrow batch instead of a
     plan-literal expression (see its docstring for the one documented
-    tie-rounding divergence). ``SPARK_GRAFT_ASSIGN_SHAPE`` in
-    {auto, literal, arrow, crossjoin} forces a shape — for A/B drills
-    and as an escape hatch; crossjoin is the legacy shape kept only
-    for comparison."""
-    shape = os.environ.get("SPARK_GRAFT_ASSIGN_SHAPE", "auto")
-    # a forced crossjoin (the legacy A/B shape) never uses the driver
-    # copy of the centroids — collecting up to n_lists × dim doubles
-    # first would charge the legacy timing a cost it never had
-    rows: list = []
-    if shape != "crossjoin":
-        rows = sorted(cent_df.collect(), key=lambda r: r["cell"])
-        dim = len(rows[0]["centroid"]) if rows else 0
-        if shape == "auto":
-            shape = (
-                "literal"
-                if len(rows) * dim <= _ASSIGN_LITERAL_MAX_ELEMENTS
-                else "arrow"
-            )
-    if rows and shape == "arrow":
-        return _assign_cells_arrow(
-            df, rows, id_alias, keep_n, vec_col, id_col, keep_dist
+    tie-rounding divergence). An empty centroid set (empty corpus)
+    assigns nothing: the output is empty, with the same columns."""
+    rows = sorted(cent_df.collect(), key=lambda r: r["cell"])
+    base = df.select(
+        F.col(id_col).alias(id_alias), F.col(vec_col).alias("__v")
+    )
+    if not rows:
+        out = base.where(F.lit(False)).select(
+            id_alias,
+            "__v",
+            F.lit(None).cast("int").alias("cell"),
+            F.lit(None).cast("double").alias("__d2"),
         )
-    if rows and shape == "literal":
-        cent_arr = _centroid_literal(rows)
+    elif len(rows) * len(rows[0]["centroid"]) > _ASSIGN_LITERAL_MAX_ELEMENTS:
+        out = _assign_cells_arrow(base, rows, id_alias, keep_n)
+    else:
         scored = F.array_sort(
             F.transform(
-                cent_arr,
+                _centroid_literal(rows),
                 lambda ct: F.struct(
                     F.aggregate(
                         F.zip_with(
@@ -737,51 +694,20 @@ def _assign_cells(
                 ),
             )
         )
-        base = df.select(
-            F.col(id_col).alias(id_alias), F.col(vec_col).alias("__v")
+        top = (
+            F.element_at(scored, 1)
+            if keep_n == 1
+            else F.explode(F.slice(scored, 1, keep_n))
         )
-        if keep_n == 1:
-            best = F.element_at(scored, 1)
-            out = base.withColumn("__best", best).select(
-                id_alias,
-                "__v",
-                F.col("__best")["cell"].alias("cell"),
-                F.col("__best")["d2"].alias("__d2"),
-            )
-        else:
-            out = base.withColumn(
-                "__top", F.explode(F.slice(scored, 1, keep_n))
-            ).select(
-                id_alias,
-                "__v",
-                F.col("__top")["cell"].alias("cell"),
-                F.col("__top")["d2"].alias("__d2"),
-            )
-        if keep_dist:
-            return out
-        return out.select(id_alias, F.col("__v"), "cell")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("__v"),
-            F.col("centroid"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy(id_alias).orderBy(F.col("d2").asc(), F.col("cell"))
-    out = (
-        df.select(F.col(id_col).alias(id_alias), F.col(vec_col).alias("__v"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("d2", d2)
-        .withColumn("__cr", F.row_number().over(w))
-        .filter(F.col("__cr") <= keep_n)
-    )
+        out = base.withColumn("__top", top).select(
+            id_alias,
+            "__v",
+            F.col("__top")["cell"].alias("cell"),
+            F.col("__top")["d2"].alias("__d2"),
+        )
     if keep_dist:
-        return out.select(
-            id_alias, F.col("__v"), "cell", F.col("d2").alias("__d2")
-        )
-    return out.select(id_alias, F.col("__v"), "cell")
+        return out
+    return out.select(id_alias, "__v", "cell")
 
 
 def ivf_topk_seeded(
@@ -842,27 +768,19 @@ def ivf_topk_seeded(
 
 
 def _pq_encode_codes(
-    c_side: DataFrame,
-    cb,
-    cb_rows: list,
-    m: int,
-    dsub: int,
-    sub_fold,
+    c_side: DataFrame, cb_rows: list, m: int, dsub: int
 ) -> DataFrame:
     """Corpus PQ encode — per (vec, j) the argmin-d2 codeword
-    (tiebreak smallest c) as (neighbor_id, j, c) rows — in the NARROW
-    zero-shuffle topology round 13 established (the legacy shape
-    crossJoined the corpus to m × ksub × its row count and
-    shuffled+sorted corpus × m rows through a Window exchange; at a
-    billion vectors that exchange IS the encode cost).
+    (tiebreak smallest c) as (neighbor_id, j, c) rows — in a NARROW
+    zero-shuffle topology (a crossJoin to m × ksub × the corpus rows
+    plus a Window exchange over corpus × m rows would make that
+    exchange the whole encode cost at a billion vectors).
 
-    Round 14 moves the per-row argmin from plan-literal higher-order
-    functions to an ARROW-BATCHED kernel: the literal HOFs
-    (transform/aggregate over an m × ksub × dsub literal codebook) are
-    interpreted per row — measured ~0.9 s of fixed overhead at sf0.1
-    and ADVICE r13 flagged the uncapped plan bloat at large
-    nbits × dim — while the kernel hands whole Arrow batches to numpy
-    (guide §4.2) with the codebook closure-captured (a few KB).
+    The per-row argmin is an ARROW-BATCHED kernel: whole Arrow batches
+    go to numpy (guide §4.2) with the codebook closure-captured (a few
+    KB), where plan-literal higher-order functions over an
+    m × ksub × dsub codebook are interpreted per row (~0.9 s of fixed
+    overhead at sf0.1) and bloat the plan at large nbits × dim.
 
     BIT-EXACTNESS (the oracle serves this path): the kernel
     accumulates (a_d − b_d)² in DIM ORDER — ``acc += diff²`` one d at
@@ -870,125 +788,57 @@ def _pq_encode_codes(
     IEEE operation sequence as the SQL left fold
     ``aggregate(zip_with(sub, w, (a-b)*(a-b)), 0.0, acc+x)``; and
     ``argmin`` takes the FIRST minimum with codewords ordered by c, the
-    same (d2 asc, c asc) tiebreak as the literal array_sort and the
-    legacy row_number. Same construction as make_dot_pandas. Pinned
-    code-for-code equal to both prior shapes in
-    tests/test_optimization_r14.py. Non-finite codewords (impossible
-    for real vector data) fall back to the legacy crossJoin shape —
-    NaN d2 ordering differs between numpy (NaN wins argmin) and SQL
-    (NaN sorts last), and SQL has no inf/nan double literal either.
-    ``SPARK_GRAFT_PQ_ENCODE_SHAPE`` in {auto, arrow, literal,
-    crossjoin} forces a shape for A/B drills; literal keeps round 13's
-    plan-literal form (unchanged, still uncapped — only ever used when
-    forced)."""
-    import math as _math
-
+    same (d2 asc, c asc) tiebreak as a SQL row_number. Same
+    construction as make_dot_pandas. Pinned code-for-code equal to the
+    crossJoin + window form in tests/test_optimization_r13.py. The
+    codewords must be finite (:func:`pq_topk_seeded` rejects others):
+    numpy's argmin lets a NaN win where SQL sorts it last."""
+    import numpy as np
     from pyspark.sql import types as T
 
-    shape = os.environ.get("SPARK_GRAFT_PQ_ENCODE_SHAPE", "auto")
-    finite = all(_math.isfinite(x) for _j, _c, w in cb_rows for x in w)
-    if shape == "auto":
-        shape = "arrow" if finite else "crossjoin"
-    if shape == "arrow":
+    books = np.empty((m, len(cb_rows) // m, dsub), dtype=np.float64)
+    for j, c, w in cb_rows:
+        books[j, c] = w
+
+    out_schema = T.StructType(
+        [
+            c_side.schema["neighbor_id"],
+            T.StructField("j", T.IntegerType(), False),
+            T.StructField("c", T.IntegerType(), False),
+        ]
+    )
+
+    def encode(batches):
         import numpy as np
+        import pandas as pd
 
-        books = np.empty((m, len(cb_rows) // m, dsub), dtype=np.float64)
-        for j, c, w in cb_rows:
-            books[j, c] = w
-
-        out_schema = T.StructType(
-            [
-                c_side.schema["neighbor_id"],
-                T.StructField("j", T.IntegerType(), False),
-                T.StructField("c", T.IntegerType(), False),
-            ]
-        )
-
-        def encode(batches):
-            import numpy as np
-            import pandas as pd
-
-            mm, ksub, dd = books.shape
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                X = np.stack(pdf["cv"].to_numpy()).astype(
-                    np.float64, copy=False
-                )
-                codes = np.empty((n, mm), dtype=np.int32)
-                for j in range(mm):
-                    sub = X[:, j * dd : (j + 1) * dd]
-                    acc = np.zeros((n, ksub), dtype=np.float64)
-                    for d in range(dd):  # dim-ordered: the SQL fold
-                        diff = sub[:, d][:, None] - books[j, :, d][None, :]
-                        acc += diff * diff
-                    codes[:, j] = acc.argmin(axis=1)  # first min = low c
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": pdf["neighbor_id"].to_numpy().repeat(mm),
-                        "j": np.tile(
-                            np.arange(mm, dtype=np.int32), n
-                        ),
-                        "c": codes.ravel(),
-                    }
-                )
-
-        return c_side.mapInPandas(encode, schema=out_schema)
-    if shape == "literal" and finite:
-        code_structs = []
-        for j in range(m):
-            cw_lit = F.expr(
-                "array(" + ",".join(
-                    "named_struct('c', {c}, 'w', array({vals}))".format(
-                        c=int(c), vals=",".join(f"{x!r}D" for x in w)
-                    )
-                    for (jj, c, w) in cb_rows
-                    if jj == j
-                ) + ")"
+        mm, ksub, dd = books.shape
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            X = np.stack(pdf["cv"].to_numpy()).astype(
+                np.float64, copy=False
             )
-            sub = F.slice(F.col("cv"), j * dsub + 1, dsub)
-            best = F.element_at(
-                F.array_sort(
-                    F.transform(
-                        cw_lit,
-                        lambda cw: F.struct(
-                            F.aggregate(
-                                F.zip_with(
-                                    sub,
-                                    cw["w"],
-                                    lambda a, b: (a.cast("double") - b)
-                                    * (a.cast("double") - b),
-                                ),
-                                F.lit(0.0),
-                                lambda acc, x: acc + x,
-                            ).alias("d2"),
-                            cw["c"].alias("c"),
-                        ),
-                    )
-                ),
-                1,
+            codes = np.empty((n, mm), dtype=np.int32)
+            for j in range(mm):
+                sub = X[:, j * dd : (j + 1) * dd]
+                acc = np.zeros((n, ksub), dtype=np.float64)
+                for d in range(dd):  # dim-ordered: the SQL fold
+                    diff = sub[:, d][:, None] - books[j, :, d][None, :]
+                    acc += diff * diff
+                codes[:, j] = acc.argmin(axis=1)  # first min = low c
+            yield pd.DataFrame(
+                {
+                    "neighbor_id": pdf["neighbor_id"].to_numpy().repeat(mm),
+                    "j": np.tile(
+                        np.arange(mm, dtype=np.int32), n
+                    ),
+                    "c": codes.ravel(),
+                }
             )
-            code_structs.append(
-                F.struct(F.lit(j).alias("j"), best["c"].alias("c"))
-            )
-        return (
-            c_side.select(
-                "neighbor_id",
-                F.explode(F.array(*code_structs)).alias("__jc"),
-            )
-            .select("neighbor_id", F.col("__jc.j"), F.col("__jc.c"))
-        )
-    wenc = Window.partitionBy("neighbor_id", "j").orderBy(
-        F.col("d2").asc(), F.col("c")
-    )
-    return (
-        c_side.crossJoin(cb)
-        .withColumn("d2", sub_fold("cv", mul=False))
-        .withColumn("__r", F.row_number().over(wenc))
-        .filter(F.col("__r") == 1)
-        .select("neighbor_id", "j", "c")
-    )
+
+    return c_side.mapInPandas(encode, schema=out_schema)
 
 
 def pq_topk_seeded(
@@ -1026,6 +876,12 @@ def pq_topk_seeded(
     dim = len(samples[0][2])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+    if not all(math.isfinite(x) for _i, _sid, v in samples for x in v):
+        raise ValueError(
+            "pq_topk_seeded: a sampled codebook vector holds NaN/inf "
+            f"(column {vec_col!r}); filter or impute non-finite "
+            "embeddings first"
+        )
     dsub = dim // m
     spark = corpus.sparkSession
     # codebook rows: (j, c, codeword[dsub])
@@ -1038,33 +894,29 @@ def pq_topk_seeded(
         spark.createDataFrame(cb_rows, "j int, c int, w array<double>")
     )
 
-    def sub_fold(vec_col_name, mul):
-        """Left fold over the j-th subspace: (v[j*dsub+d] op w[d])."""
-        sub = F.slice(F.col(vec_col_name), F.col("j") * dsub + 1, dsub)
-        if mul:
-            prods = F.zip_with(
-                sub, F.col("w"), lambda a, b: a.cast("double") * b
-            )
-        else:
-            prods = F.zip_with(
-                sub,
-                F.col("w"),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            )
-        return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
     c_side = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
-    codes = _pq_encode_codes(c_side, cb, cb_rows, m, dsub, sub_fold)
-    # per-query LUT: dot(q_sub_j, codeword_{j,c})
+    codes = _pq_encode_codes(c_side, cb_rows, m, dsub)
+    # per-query LUT: dot(q_sub_j, codeword_{j,c}), a left fold over
+    # the j-th subspace
     q_side = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
+    q_sub = F.slice(F.col("qv"), F.col("j") * dsub + 1, dsub)
     lut = (
         F.broadcast(q_side)
         .crossJoin(cb)
-        .withColumn("val", sub_fold("qv", mul=True))
+        .withColumn(
+            "val",
+            F.aggregate(
+                F.zip_with(
+                    q_sub, F.col("w"), lambda a, b: a.cast("double") * b
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+        )
         .select("query_id", "j", "c", "val")
     )
     # ADC score: conditional-max pivot to one column per subspace, then
@@ -1326,8 +1178,8 @@ def _resolve_ann_gen_overlay(spark, path: str, meta: dict) -> dict:
         if "cells_schema" not in overlay:
             # overlay written before cells_schema rode the commit: the
             # base sidecar's recorded schema describes the PREVIOUS
-            # generation's dir, not this one — drop it so reads fall
-            # back to inference instead of applying a stale schema
+            # generation's dir, not this one — drop it so probes fail
+            # loud instead of reading with a stale schema
             meta.pop("cells_schema", None)
         break
     return meta
@@ -2151,10 +2003,6 @@ def probe_ann_index(
         cells_raw = _probed_cells_df(
             spark, meta, f"{path}/{_cells_rel(meta)}", probed_cells
         )
-        if cells_raw is None:  # pre-r13 index: full-listing fallback
-            cells_raw = _cells_reader(spark, meta).parquet(
-                f"{path}/{_cells_rel(meta)}"
-            )
         cells_raw = cells_raw.filter(F.col("cell").isin(probed_cells))
     cells = cells_raw.select(
         F.col("id").alias("neighbor_id"), F.col("vec").alias("cv"), "cell"
@@ -2353,8 +2201,6 @@ def probe_rp_index(
     probed = sorted(r[0] for r in ids)
     spark.catalog.refreshByPath(f"{path}/cells")
     cells_raw = _probed_cells_df(spark, meta, f"{path}/cells", probed)
-    if cells_raw is None:  # pre-r13 index: full-listing fallback
-        cells_raw = _cells_reader(spark, meta).parquet(f"{path}/cells")
     cells = (
         cells_raw
         .filter(F.col("cell").isin(probed))

@@ -104,8 +104,7 @@ def _write_file(spark: SparkSession, path: str, data: bytes) -> None:
 #: always are). Any commit dir without a sidecar (pre-round-14
 #: tables), or any type conflict the emulation does not model, falls
 #: back to real footer inference — the fast path is strictly an
-#: optimization. ``SPARK_GRAFT_TABLE_SCHEMA_SIDECAR=0`` disables the
-#: read-side use for A/B.
+#: optimization.
 _COMMIT_SCHEMA_NAME = "_schema.json"
 _COMMIT_SCHEMA_MEMO: "OrderedDict[str, object]" = OrderedDict()
 _COMMIT_SCHEMA_MEMO_MAX = 4096
@@ -216,10 +215,8 @@ def _merge_types(a, b):
 
 def _rels_schema(spark: SparkSession, table_path: str, rels, merge: bool):
     """Driver-side schema for an explicit relative-file list, from the
-    commit-dir sidecars; None (= use footer inference) when disabled,
-    any dir lacks a sidecar, or the merge emulation hits a conflict."""
-    if os.environ.get("SPARK_GRAFT_TABLE_SCHEMA_SIDECAR", "1") == "0":
-        return None
+    commit-dir sidecars; None (= use footer inference) when any dir
+    lacks a sidecar or the merge emulation hits a conflict."""
     rels = list(rels)
     if not rels:
         return None

@@ -7,7 +7,7 @@ fixes must be VALUE-IDENTICAL to the shapes they replaced.
 - _centroid_literal: the single-expr literal equals the per-element
   F.array(F.struct(F.lit...)) comprehension bit for bit (repr round
   trip), and non-finite values fall back to the comprehension.
-- pq_topk_seeded narrow encode: the literal argmin codes equal the
+- pq_topk_seeded narrow encode: the Arrow argmin codes equal the
   legacy crossJoin + window codes row for row.
 """
 
@@ -83,10 +83,9 @@ def test_centroid_literal_nonfinite_falls_back(spark):
 
 
 def test_pq_seeded_narrow_encode_matches_legacy_codes(spark, sf_dir):
-    """The round-13 narrow PQ encode (literal codebook, no crossJoin/
-    window exchange) must produce the same (neighbor_id, j, c) codes
-    as the legacy shape it replaced — same d2 fold, same (d2, c)
-    tiebreak."""
+    """The narrow PQ encode (no crossJoin/window exchange) must
+    produce the same (neighbor_id, j, c) codes as the legacy shape it
+    replaced — same d2 fold, same (d2, c) tiebreak."""
     from etl_property_rumah123_spark.operators.similarity import (
         _hash_sample_rows,
     )
@@ -131,55 +130,13 @@ def test_pq_seeded_narrow_encode_matches_legacy_codes(spark, sf_dir):
         .select("neighbor_id", "j", "c")
     )
 
-    # the shipped narrow shape, extracted through the public function:
-    # run the full pq_topk_seeded and ALSO diff the codes directly by
-    # rebuilding them the way pq_topk_seeded now does
+    # the shipped narrow encode: run the full pq_topk_seeded end to
+    # end, and diff the codes of the encode it calls
     got = similarity.pq_topk_seeded(
         corpus.filter(F.col("vec_id") < 5), corpus, k=3, m=m, nbits=nbits
     )
     assert got.count() > 0  # narrow path executes end to end
 
-    code_structs = []
-    for j in range(m):
-        cw_lit = F.expr(
-            "array(" + ",".join(
-                "named_struct('c', {c}, 'w', array({vals}))".format(
-                    c=int(c), vals=",".join(f"{x!r}D" for x in w)
-                )
-                for (jj, c, w) in cb_rows
-                if jj == j
-            ) + ")"
-        )
-        subj = F.slice(F.col("cv"), j * dsub + 1, dsub)
-        best = F.element_at(
-            F.array_sort(
-                F.transform(
-                    cw_lit,
-                    lambda cw: F.struct(
-                        F.aggregate(
-                            F.zip_with(
-                                subj,
-                                cw["w"],
-                                lambda a, b: (a.cast("double") - b)
-                                * (a.cast("double") - b),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ).alias("d2"),
-                        cw["c"].alias("c"),
-                    ),
-                )
-            ),
-            1,
-        )
-        code_structs.append(
-            F.struct(F.lit(j).alias("j"), best["c"].alias("c"))
-        )
-    narrow = (
-        c_side.select(
-            "neighbor_id", F.explode(F.array(*code_structs)).alias("__jc")
-        )
-        .select("neighbor_id", F.col("__jc.j"), F.col("__jc.c"))
-    )
+    narrow = similarity._pq_encode_codes(c_side, cb_rows, m, dsub)
     diff = narrow.exceptAll(legacy).union(legacy.exceptAll(narrow))
     assert diff.count() == 0

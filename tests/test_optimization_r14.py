@@ -1,15 +1,19 @@
 """Round-14 optimization pins: every optimization must be
 VALUE-IDENTICAL to the shape it replaced.
 
-- _pq_encode_codes arrow kernel: codes equal the round-13 literal
-  shape AND the legacy crossJoin+window shape row for row (dim-ordered
-  accumulation == the SQL left fold; first-occurrence argmin ==
-  (d2 asc, c asc)).
+- _pq_encode_codes arrow kernel: the plan is narrow (MapInPandas, no
+  Window exchange, no cartesian product); its codes are pinned equal
+  to the crossJoin+window form in test_optimization_r13.py.
 - _double_array_literal: one-expr array equals the per-element F.lit
   form bit for bit; non-finite falls back.
 - plain-dir rebalance overlays carry cells_schema (ADVICE r13): after
   a rebalance the resolved meta's recorded schema matches a fresh
-  inference of the new generation dir.
+  inference of the new generation dir, and a sidecar without it
+  fails the probe loudly.
+- probes read only the probed cell= dirs, with the same rows as a
+  full-dir read filtered to the probed cells.
+- edge inputs: an empty corpus gives an empty seeded-IVF answer; a
+  non-finite sampled PQ codebook is rejected.
 - catalog._path_sig is directory-aware: rewriting a part file inside
   a parquet DIRECTORY table changes the signature even when the dir
   inode stats do not.
@@ -20,82 +24,33 @@ from __future__ import annotations
 import math
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_property_rumah123_spark.operators import similarity
 from etl_property_rumah123_spark.sources import catalog
 
 
-def _pq_fixture(spark, sf_dir):
-    from etl_property_rumah123_spark.operators.similarity import (
-        _hash_sample_rows,
-    )
+def test_pq_arrow_encode_is_the_default_plan(spark, sf_dir):
+    """The encode is the Arrow kernel: MapInPandas in the plan, no
+    crossjoin, no Window exchange."""
     from etl_property_rumah123_spark.sources.catalog import table
 
     corpus = table(spark, sf_dir, "embeddings")
     m, nbits = 8, 4
-    ksub = 2 ** nbits
-    samples = _hash_sample_rows(corpus, ksub, "pq|", "embedding", "vec_id")
-    dim = len(samples[0][2])
-    dsub = dim // m
+    samples = similarity._hash_sample_rows(
+        corpus, 2 ** nbits, "pq|", "embedding", "vec_id"
+    )
+    dsub = len(samples[0][2]) // m
     cb_rows = [
         (j, c, v[j * dsub : (j + 1) * dsub])
         for j in range(m)
         for c, _sid, v in samples
     ]
-    cb = F.broadcast(
-        spark.createDataFrame(cb_rows, "j int, c int, w array<double>")
-    )
     c_side = corpus.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
-
-    def sub_fold(vec_col_name, mul):
-        sub = F.slice(F.col(vec_col_name), F.col("j") * dsub + 1, dsub)
-        if mul:
-            prods = F.zip_with(
-                sub, F.col("w"), lambda a, b: a.cast("double") * b
-            )
-        else:
-            prods = F.zip_with(
-                sub,
-                F.col("w"),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            )
-        return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-    return c_side, cb, cb_rows, m, dsub, sub_fold
-
-
-def _encode_with_shape(shape, spark, sf_dir):
-    c_side, cb, cb_rows, m, dsub, sub_fold = _pq_fixture(spark, sf_dir)
-    prev = os.environ.get("SPARK_GRAFT_PQ_ENCODE_SHAPE")
-    os.environ["SPARK_GRAFT_PQ_ENCODE_SHAPE"] = shape
-    try:
-        return similarity._pq_encode_codes(
-            c_side, cb, cb_rows, m, dsub, sub_fold
-        )
-    finally:
-        if prev is None:
-            del os.environ["SPARK_GRAFT_PQ_ENCODE_SHAPE"]
-        else:
-            os.environ["SPARK_GRAFT_PQ_ENCODE_SHAPE"] = prev
-
-
-def test_pq_arrow_encode_matches_literal_and_legacy(spark, sf_dir):
-    arrow = _encode_with_shape("arrow", spark, sf_dir)
-    literal = _encode_with_shape("literal", spark, sf_dir)
-    legacy = _encode_with_shape("crossjoin", spark, sf_dir)
-    d1 = arrow.exceptAll(literal).union(literal.exceptAll(arrow))
-    assert d1.count() == 0
-    d2 = arrow.exceptAll(legacy).union(legacy.exceptAll(arrow))
-    assert d2.count() == 0
-
-
-def test_pq_arrow_encode_is_the_default_plan(spark, sf_dir):
-    """auto must select the Arrow kernel (MapInPandas in the plan, no
-    crossjoin, no Window exchange) for finite codebooks."""
-    codes = _encode_with_shape("auto", spark, sf_dir)
+    codes = similarity._pq_encode_codes(c_side, cb_rows, m, dsub)
     plan = codes._sc._jvm.PythonSQLUtils.explainString(
         codes._jdf.queryExecution(), "formatted"
     )
@@ -151,63 +106,52 @@ def test_rebalance_overlay_carries_cells_schema(spark, sf_dir, tmp_path):
     meta2 = similarity.read_ann_meta(spark, idx)
     assert meta2["cells_rel"] == rel  # the overlay still resolves
     assert "cells_schema" not in meta2
-
-
-def _probe_env(val):
-    import contextlib
-
-    @contextlib.contextmanager
-    def cm():
-        prev = os.environ.get("SPARK_GRAFT_ANN_PROBE_DIRS")
-        os.environ["SPARK_GRAFT_ANN_PROBE_DIRS"] = val
-        try:
-            yield
-        finally:
-            if prev is None:
-                del os.environ["SPARK_GRAFT_ANN_PROBE_DIRS"]
-            else:
-                os.environ["SPARK_GRAFT_ANN_PROBE_DIRS"] = prev
-
-    return cm()
+    # ...so a probe fails loud instead of reading the new generation
+    # dir with the previous generation's schema
+    with pytest.raises(ValueError, match="cells_schema"):
+        similarity.probe_ann_index(corpus.limit(2), idx, k=3)
 
 
 def test_probed_dirs_read_matches_full_listing(spark, sf_dir, tmp_path):
     """Round-14 probe optimization: reading only the probed cell=
-    directories (basePath + recorded schema) must return exactly the
-    full-listing + isin read's answers — on the RP index, the IVF
-    index, and a post-rebalance IVF generation dir."""
+    directories (basePath + recorded schema) must return exactly what
+    a full-dir read filtered to the probed cells returns — on the RP
+    index, the IVF index, and a post-rebalance IVF generation dir —
+    and an empty probed-dir intersection (buckets never populated)
+    returns an empty, correctly-typed frame."""
     from etl_property_rumah123_spark.sources.catalog import table
 
     corpus = table(spark, sf_dir, "embeddings")
-    q = corpus.filter(F.col("vec_id") < 8)
-
     rp = str(tmp_path / "rp_idx")
     dim = len(corpus.select("embedding").first()[0])
     similarity.write_rp_index(corpus, rp, dim=dim, num_planes=6)
     ivf = str(tmp_path / "ivf_idx")
     similarity.write_ann_index(corpus, ivf, n_lists=8)
-    similarity.rebalance_ann_index(spark, ivf)  # probe hits cells_g1
+    similarity.rebalance_ann_index(spark, ivf)  # live cells: cells_g1
 
     def rows(df):
-        return sorted(tuple(r) for r in df.collect())
+        return sorted(
+            (r["id"], tuple(r["vec"]), r["cell"]) for r in df.collect()
+        )
 
-    with _probe_env("1"):
-        rp_new = rows(similarity.probe_rp_index(q, rp, k=3))
-        ivf_new = rows(similarity.probe_ann_index(q, ivf, k=3, n_probe=2))
-    with _probe_env("0"):
-        rp_old = rows(similarity.probe_rp_index(q, rp, k=3))
-        ivf_old = rows(similarity.probe_ann_index(q, ivf, k=3, n_probe=2))
-    assert rp_new == rp_old and len(rp_new) > 0
-    assert ivf_new == ivf_old and len(ivf_new) > 0
+    for idx in (rp, ivf):
+        meta = similarity.read_ann_meta(spark, idx)
+        cells = f"{idx}/{similarity._cells_rel(meta)}"
+        present = sorted(
+            r[0]
+            for r in spark.read.parquet(cells).select("cell").distinct()
+            .collect()
+        )
+        probed = present[::2] + [10**9]  # plus a never-populated cell
+        got = similarity._probed_cells_df(spark, meta, cells, probed)
+        want = spark.read.parquet(cells).filter(F.col("cell").isin(probed))
+        assert got.schema == want.schema
+        got_rows = rows(got)
+        assert got_rows == rows(want) and len(got_rows) > 0
 
-    # empty probed-dir intersection (query maps to buckets that were
-    # never populated) returns an empty, correctly-typed frame
-    meta = similarity.read_ann_meta(spark, rp)
-    empty = similarity._probed_cells_df(
-        spark, meta, f"{rp}/cells", [10**9]
-    )
-    assert empty.count() == 0
-    assert "cell" in empty.columns
+        empty = similarity._probed_cells_df(spark, meta, cells, [10**9])
+        assert empty.count() == 0
+        assert empty.schema == want.schema
 
 
 def test_path_sig_detects_in_place_dir_rewrite(spark, tmp_path):
@@ -237,3 +181,37 @@ def test_schema_memo_is_bounded():
         catalog._memo_put(("p", i), object())
     assert len(catalog._SCHEMA_MEMO) == catalog._SCHEMA_MEMO_MAX
     catalog._SCHEMA_MEMO.clear()
+
+
+def test_ivf_seeded_empty_corpus_gives_empty_answer(spark, sf_dir):
+    """An empty corpus has no seed centroids: the assignment and the
+    IVF answer are empty frames with the usual columns and types."""
+    from etl_property_rumah123_spark.sources.catalog import table
+
+    corpus = table(spark, sf_dir, "embeddings")
+    queries = corpus.limit(3)
+    none = corpus.where(F.lit(False))
+    cent = spark.createDataFrame([], "cell int, centroid array<double>")
+    assigned = similarity._assign_cells(
+        queries, cent, "id", 2, "embedding", "vec_id", keep_dist=True
+    )
+    assert assigned.columns == ["id", "__v", "cell", "__d2"]
+    assert assigned.count() == 0
+
+    got = similarity.ivf_topk_seeded(queries, none, k=3, n_lists=4)
+    ref = similarity.ivf_topk_seeded(queries, corpus, k=3, n_lists=4)
+    assert got.dtypes == ref.dtypes
+    assert got.count() == 0
+
+
+def test_pq_seeded_rejects_non_finite_codebook(spark):
+    """A NaN in a sampled codebook vector would make the encode's
+    argmin disagree with SQL ordering: rejected before any plan runs."""
+    vecs = [(i, [float(i), 1.0, 2.0, 3.0]) for i in range(4)]
+    vecs[2] = (2, [float("nan"), 1.0, 2.0, 3.0])
+    corpus = spark.createDataFrame(
+        vecs, "vec_id long, embedding array<double>"
+    )
+    # nbits=2: all four rows are sampled into the codebook
+    with pytest.raises(ValueError, match="NaN"):
+        similarity.pq_topk_seeded(corpus, corpus, k=2, m=2, nbits=2)

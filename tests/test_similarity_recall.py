@@ -898,14 +898,6 @@ def test_rebalance_crash_safety_fully_old_or_fully_new(
     assert d["rebalance_gen"] == 1 and d["ratio"] < 1.5
 
 
-def _assignment_set(df, keep_dist=False):
-    if keep_dist:
-        return {
-            (r[0], r["cell"], round(r["__d2"], 9)) for r in df.collect()
-        }
-    return {(r[0], r["cell"]) for r in df.collect()}
-
-
 def test_assign_cells_arrow_matches_literal(spark, clustered, monkeypatch):
     """The Arrow GEMM shape (the above-literal-ceiling production
     path) must produce the SAME assignments as the plan-literal shape
@@ -926,14 +918,14 @@ def test_assign_cells_arrow_matches_literal(spark, clustered, monkeypatch):
             "cell int, centroid array<double>",
         )
     )
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_SHAPE", "literal")
+    monkeypatch.setattr(similarity, "_ASSIGN_LITERAL_MAX_ELEMENTS", 10**9)
     lit1 = similarity._assign_cells(
         clustered, cent, "id", 1, "embedding", "vec_id", keep_dist=True
     ).collect()
     lit3 = similarity._assign_cells(
         clustered, cent, "id", 3, "embedding", "vec_id", keep_dist=True
     ).collect()
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_SHAPE", "arrow")
+    monkeypatch.setattr(similarity, "_ASSIGN_LITERAL_MAX_ELEMENTS", 0)
     arw1 = similarity._assign_cells(
         clustered, cent, "id", 1, "embedding", "vec_id", keep_dist=True
     ).collect()
@@ -977,7 +969,7 @@ def test_ann_index_lifecycle_on_arrow_shape(
     literal-shape index exactly (no ties in the fixture → identical
     assignments → identical candidates → the shared exact-fold
     rescoring returns identical rows), and recall holds."""
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_SHAPE", "literal")
+    monkeypatch.setattr(similarity, "_ASSIGN_LITERAL_MAX_ELEMENTS", 10**9)
     idx_lit = str(tmp_path / "idx_lit")
     similarity.write_ann_index(
         clustered.filter(F.col("vec_id") % 4 != 0), idx_lit, n_lists=8
@@ -991,7 +983,7 @@ def test_ann_index_lifecycle_on_arrow_shape(
         for r in similarity.probe_ann_index(q, idx_lit, k=5, n_probe=2).collect()
     }
 
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_SHAPE", "arrow")
+    monkeypatch.setattr(similarity, "_ASSIGN_LITERAL_MAX_ELEMENTS", 0)
     idx_arw = str(tmp_path / "idx_arw")
     info = similarity.write_ann_index(
         clustered.filter(F.col("vec_id") % 4 != 0), idx_arw, n_lists=8
@@ -1270,52 +1262,6 @@ def test_assign_broadcast_memoized_per_centroid_set(spark):
         )
     assert len(similarity._ASSIGN_BC_CACHE) == similarity._ASSIGN_BC_MAX
     similarity._ASSIGN_BC_CACHE.clear()
-
-
-def test_forced_crossjoin_shape_skips_centroid_collect(
-    spark, clustered, monkeypatch
-):
-    """SPARK_GRAFT_ASSIGN_SHAPE=crossjoin exists to time the legacy
-    shape in A/B drills — it must not first pay a driver collect of
-    the centroid table the legacy shape never used (at the production
-    design point that is ~25 MB per call charged to the wrong side of
-    the A/B)."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    cent = F.broadcast(
-        spark.createDataFrame(
-            [
-                (i, [float(x) for x in r["embedding"]])
-                for i, r in enumerate(
-                    clustered.filter(F.col("vec_id") % 80 == 7)
-                    .orderBy("vec_id")
-                    .collect()
-                )
-            ],
-            "cell int, centroid array<double>",
-        )
-    )
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_SHAPE", "crossjoin")
-    calls = {"n": 0}
-    real = DataFrame.collect
-
-    def spy(self):
-        calls["n"] += 1
-        return real(self)
-
-    monkeypatch.setattr(DataFrame, "collect", spy)
-    out = similarity._assign_cells(
-        clustered, cent, "id", 1, "embedding", "vec_id", keep_dist=True
-    )
-    assert calls["n"] == 0, "forced crossjoin must not collect centroids"
-    monkeypatch.setattr(DataFrame, "collect", real)
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_SHAPE", "literal")
-    lit = similarity._assign_cells(
-        clustered, cent, "id", 1, "embedding", "vec_id", keep_dist=True
-    )
-    assert _assignment_set(out, keep_dist=True) == _assignment_set(
-        lit, keep_dist=True
-    )
 
 
 def test_txn_lifecycle_commits_without_checkpointing_index(

@@ -169,6 +169,28 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+@contextmanager
+def materialized(df: DataFrame):
+    """:func:`materialize` for the span of a ``with`` block, released
+    on every exit. Neither form frees itself: a ``persist``ed frame
+    stays in Spark's CacheManager until it is unpersisted, and a local
+    checkpoint's blocks stay pinned while anything still references
+    the checkpointed RDD, so a long-lived caller (a streaming sink
+    merging every micro-batch) would pile up one batch per call. A
+    frame already cached on entry keeps its cache: that entry is the
+    caller's."""
+    level = df.storageLevel  # one CacheManager lookup
+    was_cached = level.useMemory or level.useDisk
+    out = materialize(df)
+    try:
+        yield out
+    finally:
+        if out is not df:  # local checkpoint: a new frame over a LogicalRDD
+            out._jdf.queryExecution().logical().rdd().unpersist(False)
+        elif not was_cached:
+            out.unpersist()
+
+
 def scratch_base() -> str:
     """Base directory for EPHEMERAL part-local tables (the snapshot
     lifecycle and matview parts rebuild a throwaway table_log table

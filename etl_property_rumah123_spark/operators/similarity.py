@@ -873,6 +873,13 @@ def pq_topk_seeded(
     """
     ksub = 2 ** nbits
     samples = _hash_sample_rows(corpus, ksub, salt, vec_col, id_col)
+    if not samples:  # empty corpus: no codebook, no neighbours
+        return (
+            queries.select(F.col(id_col).alias("query_id"))
+            .crossJoin(corpus.select(F.col(id_col).alias("neighbor_id")))
+            .withColumn("rank", F.lit(1).cast("long"))
+            .where(F.lit(False))
+        )
     dim = len(samples[0][2])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")

@@ -276,12 +276,6 @@ def refresh_aggregate(
         )
         .withColumn(_KEY, _key_col(group_cols))
     )
-    # The CoW merge below consumes its batch FOUR times (broadcast-gate
-    # count, touched-file probe, rewrite union, key-set write) — without
-    # this, each consumption re-executes the whole catch-up plan (CDF
-    # diff + additive fold + dirty recompute). The frame is
-    # O(touched groups) — group-grain, delta-bounded — never table-sized.
-    updates = materialize(updates)
     table_log.merge_snapshot(
         updates, view_path, key=_KEY,
         extra_meta={_META_VERSION: cur},

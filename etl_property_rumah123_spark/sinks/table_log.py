@@ -1443,21 +1443,54 @@ def merge_snapshot_mor(
       :func:`delete_snapshot_eq` defaults it ON).
 
     The streaming-sink batch-id stamp rides in ``extra_meta`` exactly
-    as in the CoW form. First commit degenerates to append."""
+    as in the CoW form. First commit degenerates to a single-pass
+    append.
+
+    Every later commit evaluates the batch ONCE: it is materialized
+    (:func:`~etl_property_rumah123_spark.operators.common.materialized`)
+    before the key/DV write and the data write read it, and a lost
+    version race reuses it. A nondeterministic batch (a live scrape,
+    a nondeterministic UDF) therefore marks exactly the keys it
+    appends. Under
+    ``SPARK_GRAFT_MATERIALIZE=persist`` the cached batch is released
+    on every exit."""
+    from etl_property_rumah123_spark.operators.common import materialized
+
+    spark = df.sparkSession
+    versions = _list_versions(spark, table_path)
+    if not versions:
+        return commit_snapshot(
+            df,
+            table_path,
+            mode="append",
+            max_retries=max_retries,
+            extra_meta=extra_meta,
+        )
+    with materialized(df) as batch:
+        return _merge_mor_batch(
+            batch, table_path, key, versions, max_retries, extra_meta,
+            eq, count_matched,
+        )
+
+
+def _merge_mor_batch(
+    df: DataFrame,
+    table_path: str,
+    key: str,
+    versions: list[int],
+    max_retries: int,
+    extra_meta: dict | None,
+    eq: bool,
+    count_matched: bool | None,
+) -> int:
+    """:func:`merge_snapshot_mor`'s commit loop over an already
+    materialized batch and a non-empty version list (the over-cap
+    route of :func:`merge_snapshot` enters here with its own batch)."""
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
     token = uuid.uuid4().hex[:12]
     for _ in range(max_retries):
-        versions = _list_versions(spark, table_path)
-        if not versions:
-            return commit_snapshot(
-                df,
-                table_path,
-                mode="append",
-                max_retries=max_retries,
-                extra_meta=extra_meta,
-            )
         prev = _manifest(spark, table_path, versions[-1])
         version = versions[-1] + 1
         new_dv: list[str] = []
@@ -1553,6 +1586,7 @@ def merge_snapshot_mor(
         if _try_publish(spark, table_path, version, token, manifest):
             return version
         token = uuid.uuid4().hex[:12]
+        versions = _list_versions(spark, table_path)
     raise RuntimeError(
         f"MoR merge to {table_path} lost {max_retries} version races"
     )
@@ -3070,30 +3104,60 @@ def merge_snapshot(
     an entire-table write, honest for a merge that really does touch
     everything and wanted materialized files NOW. Deletes keep their
     own CoW/DV choice (`delete_rows`/`delete_rows_mor`) and are not
-    affected by this knob."""
+    affected by this knob.
+
+    The batch is evaluated ONCE. A first commit is a single-pass
+    append; any later commit materializes the batch
+    (:func:`~etl_property_rumah123_spark.operators.common.materialized`)
+    and its four consumers (broadcast-gate count, touched-file probe,
+    rewrite, key-set write) read those blocks, as do lost-race retries
+    and the over-cap route to the MoR form. A nondeterministic batch
+    (a live scrape, a nondeterministic UDF) therefore writes a
+    ``merge_keys`` dir that agrees with its data dir. Under
+    ``SPARK_GRAFT_MATERIALIZE=persist`` the cached batch is released
+    on every exit."""
+    from etl_property_rumah123_spark.operators.common import materialized
+
     if on_overflow not in ("mor", "cow"):
         raise ValueError(
             f"on_overflow must be 'mor' or 'cow', got {on_overflow!r}"
         )
     spark = df.sparkSession
-    jvm, fs = _fs(spark, table_path)
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
+    versions = _list_versions(spark, table_path)
+    if not versions:
+        # First commit degenerates to append — forward the caller's
+        # retry budget and metadata (a stream_batch_id stamp dropped
+        # here would break the exactly-once replay-skip contract).
+        return commit_snapshot(
+            df,
+            table_path,
+            mode="append",
+            max_retries=max_retries,
+            extra_meta=extra_meta,
+        )
+    with materialized(df) as batch:
+        return _merge_cow_batch(
+            batch, table_path, key, versions, max_retries, extra_meta,
+            on_overflow,
+        )
+
+
+def _merge_cow_batch(
+    df: DataFrame,
+    table_path: str,
+    key: str,
+    versions: list[int],
+    max_retries: int,
+    extra_meta: dict | None,
+    on_overflow: str,
+) -> int:
+    """:func:`merge_snapshot`'s commit loop over an already
+    materialized batch and a non-empty version list."""
     from pyspark.sql import functions as F
 
+    spark = df.sparkSession
     token = uuid.uuid4().hex[:12]
     for _ in range(max_retries):
-        versions = _list_versions(spark, table_path)
-        if not versions:
-            # First commit degenerates to append — forward the caller's
-            # retry budget and metadata (a stream_batch_id stamp dropped
-            # here would break the exactly-once replay-skip contract).
-            return commit_snapshot(
-                df,
-                table_path,
-                mode="append",
-                max_retries=max_retries,
-                extra_meta=extra_meta,
-            )
         prev = _manifest(spark, table_path, versions[-1])
         version = versions[-1] + 1
         # mergeSchema (inside the row-identity view): the carry side
@@ -3124,14 +3188,11 @@ def merge_snapshot(
             # Over-cap: a full CoW rewrite here is an entire-table
             # write — at 100 TB, hours of amplification for one batch.
             # The MoR form commits the same logical state in
-            # O(batch + matched) with zero rewrites; it re-reads the
-            # log and runs its own race-retry loop.
-            return merge_snapshot_mor(
-                df,
-                table_path,
-                key,
-                max_retries=max_retries,
-                extra_meta=extra_meta,
+            # O(batch + matched) with zero rewrites; it runs its own
+            # race-retry loop over the same materialized batch.
+            return _merge_mor_batch(
+                df, table_path, key, versions, max_retries, extra_meta,
+                eq=False, count_matched=None,
             )
         if touched is None:  # over MAX_TOUCHED_FILES: full CoW rewrite
             touched_rel = list(prev["files"])
@@ -3201,6 +3262,7 @@ def merge_snapshot(
         # lost the race: the base snapshot changed — recompute against
         # the new latest (the CoW rebase; stale commit dir is vacuumable)
         token = uuid.uuid4().hex[:12]
+        versions = _list_versions(spark, table_path)
     raise RuntimeError(
         f"merge into {table_path} lost {max_retries} version races"
     )

@@ -3,7 +3,9 @@ Python DataSource.
 
 The reference fetches pages serially in one process
 (/root/reference/src/extract.py:119-201). Here the page space is split
-into **page-range input partitions**, each read by an executor task
+into **page-range input partitions** (by default one per region, the
+reference's serial scan; ``pages_per_partition`` splits it further),
+each read by an executor task
 that runs its own adaptive rate limiter (S2), retries the current page
 on HTTP 429 (S5, /root/reference/src/extract.py:180-184), and
 short-circuits its range when a page has no listing cards (S4,
@@ -161,7 +163,11 @@ class ListingReader(DataSourceReader):
         self.region = options.get("region", "dki-jakarta")
         self.property_type = options.get("property_type", "rumah")
         self.num_pages = int(options.get("num_pages", "1"))
-        self.pages_per_partition = int(options.get("pages_per_partition", "5"))
+        # default: the region's whole page range is one partition — the
+        # reference's serial scrape, one rate limiter per region
+        self.pages_per_partition = int(
+            options.get("pages_per_partition", self.num_pages)
+        )
         self.fixture_dir = options.get("fixture_dir")
         self.max_retries_429 = int(options.get("max_retries_429", "5"))
         self.base_sleep = float(options.get("base_sleep", "1.0"))
@@ -211,11 +217,11 @@ class ListingReader(DataSourceReader):
                 continue
             cards = split_cards(html)
             if not cards:
-                # S4: empty 200 page ends THIS range's scan. (The
-                # reference, being serial, ends the whole scrape;
-                # partitions are independent here, so later ranges probe
-                # their own first page — same termination signal, applied
-                # per partition.)
+                # S4: empty 200 page ends THIS range's scan. By default
+                # the range is the region's whole page space, so this ends
+                # the scrape exactly as in the serial reference; with an
+                # explicit pages_per_partition, later ranges probe their
+                # own first page (same signal, applied per partition).
                 break
             for card_idx, card in enumerate(cards):
                 yield (page_num, card_idx, card, self.ads_type, self.property_type)
@@ -246,7 +252,8 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
     driver-side poll loop (what SimpleDataSourceStreamReader does) is
     the right execution shape; per-batch volume is bounded by
     ``pages_per_batch`` x cards/page. The PARALLEL path is the batch
-    ``ListingReader``'s page-range partitions for backfill; downstream
+    ``ListingReader`` with an explicit ``pages_per_partition`` for
+    backfill (its default is one partition per region); downstream
     parse/clean/merge of the streamed rows is distributed as usual."""
 
     def __init__(self, options: dict) -> None:

@@ -150,6 +150,22 @@ def test_reader_early_stop_on_empty_page(tmp_path):
     assert {r[0] for r in rows} == {1, 2}
 
 
+def test_reader_default_is_one_partition_per_region(tmp_path):
+    """Without pages_per_partition the region's page space is ONE range,
+    so an empty page ends the whole region's scan, as in the serial
+    reference (S4); an explicit split still probes each range."""
+    write_fixture_pages(str(tmp_path), num_pages=6, cards_per_page=4)
+    (tmp_path / "page_3.html").write_text("<html><body></body></html>")
+    opts = reader_opts(str(tmp_path), num_pages=6)
+    del opts["pages_per_partition"]
+    reader = ListingReader(opts)
+    assert reader.partitions() == [PageRange(1, 6)]
+    assert {r[0] for r in read_all(reader)} == {1, 2}
+
+    split = ListingReader(reader_opts(str(tmp_path), num_pages=6))
+    assert {r[0] for r in read_all(split)} == {1, 2, 5, 6}
+
+
 def test_reader_retries_on_429_then_succeeds(tmp_path):
     write_fixture_pages(str(tmp_path), num_pages=2, cards_per_page=3)
     (tmp_path / "statuses.json").write_text(json.dumps({"2": [429, 429, 200]}))

@@ -204,6 +204,21 @@ def test_ivf_seeded_empty_corpus_gives_empty_answer(spark, sf_dir):
     assert got.count() == 0
 
 
+def test_pq_seeded_empty_corpus_gives_empty_answer(spark, sf_dir):
+    """An empty corpus has no codebook: PQ answers with an empty frame
+    typed like a real answer, as IVF does, instead of an IndexError."""
+    from etl_property_rumah123_spark.sources.catalog import table
+
+    corpus = table(spark, sf_dir, "embeddings")
+    queries = corpus.limit(3)
+    got = similarity.pq_topk_seeded(
+        queries, corpus.where(F.lit(False)), k=3, m=4, nbits=2
+    )
+    ref = similarity.pq_topk_seeded(queries, corpus, k=3, m=4, nbits=2)
+    assert got.dtypes == ref.dtypes
+    assert got.count() == 0
+
+
 def test_pq_seeded_rejects_non_finite_codebook(spark):
     """A NaN in a sampled codebook vector would make the encode's
     argmin disagree with SQL ordering: rejected before any plan runs."""
